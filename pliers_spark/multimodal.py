@@ -742,44 +742,3 @@ def image_resize_bilinear_stats(
             yield pd.DataFrame(rows)
 
     return df.select(id_col, payload_col).mapInPandas(fn, schema=IMAGE_RESIZE_SCHEMA)
-
-
-def mp3_frame_index(
-    df: DataFrame,
-    id_col: str = "id",
-    payload_col: str = "payload",
-) -> DataFrame:
-    """Per-frame container index over REAL MPEG Layer III byte streams
-    (codecs_mp3.index_frames): one row per frame with its byte offset,
-    computed length, bitrate and padding — the structural surface of
-    pliers' MP3 ingestion (pliers/stimuli/audio.py:29-55 hands the
-    container to moviepy; the engine indexes it natively).  The walk is
-    STRICT: every frame's computed length must land exactly on the next
-    sync word, so the published bitrate/sample-rate tables are
-    re-validated on every stream this stage touches.  All outputs are
-    exact integers — a relational oracle recomputes offsets as a
-    cumulative sum of the closed-form frame lengths."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pliers_spark import codecs_mp3
-
-        for pdf in batches:
-            rows = []
-            for i, payload in zip(pdf[id_col], pdf[payload_col]):
-                frames = codecs_mp3.index_frames(bytes(payload or b""))
-                for k, fh in enumerate(frames):
-                    rows.append(
-                        (int(i), k, fh.offset, fh.frame_len,
-                         fh.bitrate_kbps, fh.padded, fh.sample_rate)
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["id", "frame", "offset", "frame_len",
-                         "bitrate_kbps", "padded", "sample_rate"],
-            )
-
-    return df.mapInPandas(
-        fn,
-        schema="id long, frame long, offset long, frame_len long, "
-               "bitrate_kbps long, padded long, sample_rate long",
-    )

@@ -330,8 +330,6 @@ def q_curation_pipeline(spark, sf_dir):
     split assignment. Catalyst pipelines the scrub/split projections
     into the rank filter; two window shuffles (hash, lang) total -- the
     shape a 100 TB cleaning pass actually runs."""
-    from pliers_spark.queries import _PII_RULES  # self-import safe at call time
-
     d = _docs(spark, sf_dir)
     w_rep = Window.partitionBy(md5_int(F.col("text"))).orderBy("doc_id")
     reps = d.withColumn("rn", F.row_number().over(w_rep)).where(F.col("rn") == 1)

@@ -4,7 +4,8 @@
 Queries: dedup_exact, minhash_signatures, minhash_lsh, lsh_recall,
     simhash, ngram_jaccard, prefix_filter_jaccard, host_pagerank,
     doc_authority, exact_substr_spans, exact_substr_cut, doc_fingerprint,
-    embedding_topk, ann_ivf_topk, embedding_near_dups, semantic_dedup
+    embedding_topk, ann_ivf_topk, embedding_near_dups, semantic_dedup,
+    chunk_dedup
 """
 from __future__ import annotations
 
@@ -561,6 +562,30 @@ def q_semantic_dedup(spark, sf_dir):
 
     emb = load_table(spark, sf_dir, "embeddings")
     return semantic_dedup(emb, "vec_id", "embedding", k=8, tau_num=2, tau_den=5)
+
+
+
+# --------------------------------------------------------------------------
+# C4/Gopher repeated-span removal (operators/lm.py)
+
+
+def _chunk_dedup_sql() -> str:
+    from pliers_spark.operators.lm import chunk_dedup_sql
+
+    return chunk_dedup_sql()
+
+
+
+@query("chunk_dedup", _chunk_dedup_sql())
+def q_chunk_dedup(spark, sf_dir):
+    """C4/Gopher-style repeated-span removal: census every 8-token span,
+    drop spans occurring in >2 distinct docs (boilerplate), reassemble
+    surviving spans in order. Census → small dropped set → broadcast
+    LEFT ANTI join: the corpus never shuffles for the filter, only for
+    the ordered per-doc reassembly (operators/lm.py)."""
+    from pliers_spark.operators.lm import chunk_dedup
+
+    return chunk_dedup(_docs(spark, sf_dir))
 
 
 

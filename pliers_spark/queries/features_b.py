@@ -8,7 +8,8 @@ Queries: stft_power, resample_lowpass, doc_embedding_maxpool, diag_flags,
     cluster_representatives, novelty_jaccard, top_tokens_per_doc,
     props_extract, hash_sample, split_assign, feature_zscore,
     latest_value_per_user, quality_filter, regexp_stem, ann_lsh_topk,
-    lag_split, sessionize_split, ffill_split, rolling_split
+    lag_split, sessionize_split, ffill_split, rolling_split,
+    image_decode_stats, image_saliency, jpeg_decode_stats
 """
 from __future__ import annotations
 
@@ -947,3 +948,226 @@ def _lm_common_ctes() -> str:
          WHERE trim(text) <> ''),
        ctx0 AS (SELECT doc_id, {dims} FROM toks GROUP BY doc_id),
        ctx AS (SELECT d.doc_id, {zeros} FROM documents d LEFT JOIN ctx0 c USING (doc_id))"""
+
+
+
+# --------------------------------------------------------------------------
+# §2.1 multimodal binary payloads: REAL codec round trips, oracle-checked
+#
+# The testdata tables carry no binary column, so each query synthesises
+# its payloads from doc_id with a closed-form pixel formula,
+# encodes them with the real container codec (pliers_spark.codecs),
+# and runs the production decode → feature stage on the bytes. The
+# DuckDB oracle recomputes the same features from the generating
+# formula directly — so a green row certifies the encode → decode →
+# extract path end-to-end (any codec bug breaks the match). In
+# production the payload column comes off the table scan instead; the
+# mapInPandas stages are identical.
+
+
+def _synth_payloads(spark, sf_dir, build):
+    """(doc_id → bytes) over documents as an `id, payload` DataFrame.
+
+    Deterministic per-row generation inside mapInPandas — distributed,
+    no driver materialisation, stand-in for a real binary column scan."""
+    import pandas as pd
+
+    def fn(batches):
+        for pdf in batches:
+            yield pd.DataFrame(
+                {"id": pdf["doc_id"].astype("int64"),
+                 "payload": [build(int(d)) for d in pdf["doc_id"]]}
+            )
+
+    return (
+        _docs(spark, sf_dir)
+        .select("doc_id")
+        .mapInPandas(fn, schema="id long, payload binary")
+    )
+
+
+
+def _synth_image(did: int) -> "np.ndarray":
+    """8x8 RGB image: pixel(r,c,ch) = (did*131 + r*17 + c*5 + ch*29) % 256."""
+    import numpy as np
+
+    r = np.arange(8)[:, None, None]
+    c = np.arange(8)[None, :, None]
+    ch = np.arange(3)[None, None, :]
+    return ((did * 131 + r * 17 + c * 5 + ch * 29) % 256).astype(np.uint8)
+
+
+
+_IMG_PX = "(doc_id*131 + r.r*17 + c.c*5 + {ch})"
+
+
+
+@query(
+    "image_decode_stats",
+    f"""WITH px AS (
+         SELECT d.doc_id,
+                GREATEST({_IMG_PX.format(ch=0)} % 256,
+                         {_IMG_PX.format(ch=29)} % 256,
+                         {_IMG_PX.format(ch=58)} % 256) AS mx
+         FROM documents d, generate_series(0,7) r(r), generate_series(0,7) c(c))
+       SELECT doc_id, CAST(8 AS INTEGER) AS width, CAST(8 AS INTEGER) AS height,
+              CAST(3 AS INTEGER) AS channels,
+              (SUM(mx)::DOUBLE / 64) / 255 AS mean_brightness
+       FROM px GROUP BY doc_id""",
+)
+def q_image_decode_stats(spark, sf_dir):
+    """BrightnessExtractor over a REAL PPM encode→decode round trip
+    (pliers/extractors/image.py:26-38; decode = pliers_spark.codecs):
+    8x8 formula images → P6 bytes → production image_stats stage.
+    mean_brightness = mean(max over channels)/255 is exact: integer
+    pixel sums, then /64 (power of two) and one /255 — bit-identical
+    on both engines. Arrow-batched, payloads never leave executors."""
+    from pliers_spark import codecs, multimodal
+
+    payloads = _synth_payloads(
+        spark, sf_dir, lambda did: codecs.encode_ppm(_synth_image(did))
+    )
+    return multimodal.image_stats(payloads).withColumnRenamed("id", "doc_id")
+
+
+# --------------------------------------------------------------------------
+# round 3: SaliencyExtractor counterpart (VERDICT r2 item 6) — Itti-Koch
+# summary stats over the real PNG decode path
+
+
+_SAL_PX = "(d.doc_id*149 + r.r*23 + c.c*11 + {ch})"
+
+
+@query(
+    "image_saliency",
+    f"""WITH px AS (
+         SELECT d.doc_id, r.r, c.c,
+                ({_SAL_PX.format(ch=0)} % 256
+                 + {_SAL_PX.format(ch=37)} % 256
+                 + {_SAL_PX.format(ch=74)} % 256)::BIGINT AS i
+         FROM documents d, generate_series(0,7) r(r), generate_series(0,7) c(c)),
+       tot AS (SELECT doc_id, sum(i)::BIGINT AS s FROM px GROUP BY doc_id),
+       nb AS (
+         SELECT p.doc_id, p.r, p.c, sum(p2.i)::BIGINT AS cs
+         FROM px p JOIN px p2 ON p2.doc_id = p.doc_id
+          AND p2.r BETWEEN p.r - 1 AND p.r + 1
+          AND p2.c BETWEEN p.c - 1 AND p.c + 1
+         GROUP BY p.doc_id, p.r, p.c),
+       sal AS (
+         SELECT n.doc_id, n.r, n.c, abs(n.cs*64 - 9*t.s)::BIGINT AS sal
+         FROM nb n JOIN tot t USING (doc_id)),
+       mx AS (SELECT doc_id, max(sal) AS smax FROM sal GROUP BY doc_id),
+       pos AS (
+         SELECT s.doc_id, min(s.r*8 + s.c) AS idx
+         FROM sal s JOIN mx m USING (doc_id) WHERE s.sal = m.smax
+         GROUP BY s.doc_id),
+       qt AS (
+         SELECT s.doc_id,
+                CASE WHEN m.smax = 0 THEN 0
+                     ELSE (510*s.sal + m.smax) // (2*m.smax) END AS q
+         FROM sal s JOIN mx m USING (doc_id)),
+       hist AS (SELECT doc_id, q, count(*)::BIGINT AS cnt FROM qt GROUP BY doc_id, q),
+       cum AS (
+         SELECT doc_id, q, cnt,
+                sum(cnt) OVER win AS w0, sum(q*cnt) OVER win AS s0,
+                sum(q*cnt) OVER (PARTITION BY doc_id) AS stot,
+                count(*) OVER (PARTITION BY doc_id) AS ndist,
+                row_number() OVER (PARTITION BY doc_id ORDER BY q) AS rn,
+                max(q) OVER (PARTITION BY doc_id) AS qmax
+         FROM hist
+         WINDOW win AS (PARTITION BY doc_id ORDER BY q ROWS UNBOUNDED PRECEDING)),
+       cand AS (
+         SELECT doc_id, q, qmax,
+                (s0*(64 - w0) - (stot - s0)*w0) AS a, w0*(64 - w0) AS b
+         FROM cum WHERE rn < ndist),
+       pick AS (
+         SELECT doc_id, q AS t,
+                row_number() OVER (PARTITION BY doc_id
+                                   ORDER BY (a*a)::DOUBLE / b DESC, q ASC) AS pr
+         FROM cand),
+       thr AS (
+         SELECT c.doc_id, coalesce(p.t, c.qmax) AS t
+         FROM (SELECT DISTINCT doc_id, qmax FROM cum) c
+         LEFT JOIN (SELECT doc_id, t FROM pick WHERE pr = 1) p USING (doc_id)),
+       high AS (
+         SELECT q.doc_id, sum((q.q > t.t)::INT)::BIGINT AS nh
+         FROM qt q JOIN thr t USING (doc_id) GROUP BY q.doc_id)
+       SELECT m.doc_id,
+              round_even(m.smax / 146880.0, 6) AS max_saliency,
+              (p.idx // 8)::INT AS max_y,
+              (p.idx % 8)::INT AS max_x,
+              round(h.nh / 64.0, 6) AS frac_high_saliency
+       FROM mx m JOIN pos p USING (doc_id) JOIN high h USING (doc_id)""",
+)
+def q_image_saliency(spark, sf_dir):
+    """SaliencyExtractor summary stats (pliers/extractors/image.py:72-103:
+    Itti-Koch max_saliency / max_y / max_x / frac_high_saliency with Otsu
+    binarization) over a REAL PNG encode→decode round trip: 8x8 formula
+    images → stdlib-zlib PNG → production image_saliency_stats stage
+    (multimodal.py). The center-surround map is kept in exact integer
+    units and the Otsu threshold maximizes the exact-integer between-class
+    variance, so the relational oracle recomputes the identical pixels,
+    map, threshold, and fractions — any codec or formula bug breaks the
+    row hash."""
+    import numpy as np
+
+    from pliers_spark import codecs, multimodal
+
+    def build(did: int) -> bytes:
+        r = np.arange(8)[:, None, None]
+        c = np.arange(8)[None, :, None]
+        ch = np.arange(3)[None, None, :]
+        img = ((did * 149 + r * 23 + c * 11 + ch * 37) % 256).astype(np.uint8)
+        return codecs.encode_png(img)
+
+    payloads = _synth_payloads(spark, sf_dir, build)
+    return multimodal.image_saliency_stats(payloads).withColumnRenamed("id", "doc_id")
+
+
+# --------------------------------------------------------------------------
+# round 3 (stretch, VERDICT r2 item 10): baseline-JPEG round trip
+
+
+@query(
+    "jpeg_decode_stats",
+    """WITH blk AS (
+         SELECT d.doc_id,
+                ((d.doc_id*37 + i.i*101 + j.j*53) % 256)::BIGINT AS v
+         FROM documents d, generate_series(0,1) i(i), generate_series(0,1) j(j)),
+       dec AS (
+         SELECT doc_id,
+                greatest(0.0, least(255.0,
+                    2*round_even((v - 128) / 2.0, 0) + 128)) AS dv
+         FROM blk),
+       s AS (SELECT doc_id, sum(dv) AS sd FROM dec GROUP BY doc_id)
+       SELECT doc_id, CAST(16 AS INTEGER) AS width, CAST(16 AS INTEGER) AS height,
+              CAST(3 AS INTEGER) AS channels,
+              ((sd * 64) / 256.0) / 255.0 AS mean_brightness
+       FROM s""",
+)
+def q_jpeg_decode_stats(spark, sf_dir):
+    """BrightnessExtractor over a REAL baseline-JPEG encode→decode round
+    trip (pliers loads JPEG via imageio; here the engine's own stdlib
+    T.81 codec — markers, DQT, SOF0, Huffman scan, byte stuffing, DCT):
+    16x16 images of four constant 8x8 blocks → quality-50 JPEG →
+    production image_stats stage. Constant blocks make the lossy
+    round trip CLOSED-FORM: only the DC survives, quantized at Q0=16,
+    so decoded(v) = clip(2*round_half_even((v-128)/2) + 128) exactly
+    (the codec snaps mathematically-integer DCT values to the 1e-6
+    grid, making the .5 boundary reproducibly half-even). The oracle
+    recomputes that form relationally — any Huffman/marker/DCT bug
+    changes the pixels and breaks the hash."""
+    import numpy as np
+
+    from pliers_spark import codecs, multimodal
+
+    def build(did: int) -> bytes:
+        i = np.arange(2)[:, None]
+        j = np.arange(2)[None, :]
+        blocks = ((did * 37 + i * 101 + j * 53) % 256).astype(np.uint8)
+        img = np.kron(blocks, np.ones((8, 8), dtype=np.uint8))
+        return codecs.encode_jpeg(img, quality=50)
+
+    payloads = _synth_payloads(spark, sf_dir, build)
+    return multimodal.image_stats(payloads).withColumnRenamed("id", "doc_id")
+

@@ -5,7 +5,7 @@ Queries: kmv_distinct, kmv_overlap, bloom_fpr_audit, priority_sample,
     rendezvous_shards, neyman_allocation, kmv_rollup, diff_in_diff,
     markov_accuracy, mde_power, cuped_adjustment, sprt_crossing,
     source_jsd, conformal_coverage, budget_select, lsh_band_sweep,
-    rec_coverage, missing_mass, snapshot_asof, classifier_kappa,
+    rec_coverage, missing_mass, classifier_kappa,
     posting_compression
 """
 from __future__ import annotations
@@ -1576,58 +1576,7 @@ def q_missing_mass(spark, sf_dir):
 
 
 # --------------------------------------------------------------------------
-# batch 38: snapshot time travel, Cohen's kappa, posting-list compression
-
-@query(
-    "snapshot_asof",
-    """SELECT 'asof_s1' AS snapshot_label,
-              count(*)::BIGINT AS n_docs, sum(n_chars)::BIGINT AS sum_chars
-       FROM documents WHERE doc_id % 3 = 0
-       UNION ALL
-       SELECT 'current', count(*)::BIGINT, sum(n_chars)::BIGINT
-       FROM documents WHERE doc_id % 3 IN (0, 1)
-       UNION ALL
-       SELECT 'delta_s2', count(*)::BIGINT, sum(n_chars)::BIGINT
-       FROM documents WHERE doc_id % 3 = 1""",
-)
-def q_snapshot_asof(spark, sf_dir):
-    """Iceberg-style snapshot isolation exercised end-to-end (north
-    rule: versioned input with time travel): commit docs with
-    doc_id%3==0 as snapshot 1, append doc_id%3==1 as snapshot 2, then
-    read (a) AS OF snapshot 1 — later commits must be invisible,
-    (b) the current table, and (c) the INCREMENTAL delta (s1, s2] —
-    only snapshot 2's files are scanned. The oracle is the pure
-    relational meaning of each read, so a stale manifest, a leaked
-    file, or a wrong delta walk all hash-mismatch. The table lives
-    under spark-warehouse/ and is rebuilt idempotently per run
-    (sources/snapshots.py; reference anchor: pliers has no versioned
-    store — this is the engine-level Iceberg contract the 10^12-page
-    crawl table needs)."""
-    import os
-    import shutil
-
-    from pliers_spark.sources.snapshots import SnapshotTable
-
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    root = os.path.join("/root/repo/spark-warehouse", f"_asof_demo_{tag}")
-    shutil.rmtree(root, ignore_errors=True)
-    t = SnapshotTable(root)
-    d = _docs(spark, sf_dir).select("doc_id", "n_chars")
-    s1 = t.commit(d.where(F.col("doc_id") % 3 == 0), "append")
-    s2 = t.commit(d.where(F.col("doc_id") % 3 == 1), "append")
-
-    def summarize(df, label):
-        return df.agg(
-            F.lit(label).alias("snapshot_label"),
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
-            F.sum("n_chars").cast("long").alias("sum_chars"),
-        ).select("snapshot_label", "n_docs", "sum_chars")
-
-    asof = summarize(t.read(spark, s1), "asof_s1")
-    cur = summarize(t.read(spark), "current")
-    delta = summarize(t.read_incremental(spark, s1, s2), "delta_s2")
-    return asof.unionAll(cur).unionAll(delta)
-
+# batch 38: Cohen's kappa, posting-list compression
 
 
 @query(

@@ -11,7 +11,7 @@ Queries: moore_lewis, oov_rate, haar_energy, fd_binning, pacf_lag2,
 from __future__ import annotations
 
 from ._registry import F, T, Window, _docs, _events, load_table, md5_int, md5_int_sql, query
-from .stats_02 import _synth_image, _synth_payloads
+from .features_b import _synth_image, _synth_payloads
 
 
 

@@ -15,7 +15,25 @@ from __future__ import annotations
 from ._registry import F, R, T, Window, _docs, _events, load_table, md5_int, md5_int_sql, query
 from pliers_spark.operators.census import census_collect
 from .stats_11 import _closure_sql
-from .stats_14 import _HEX_BITLEN, _KNNLOO_K, _KNNLOO_SAMPLE_MOD, _emb_micro_spark
+
+# bit-length of a nonzero hex digit (leading-bit position within its nibble)
+_HEX_BITLEN = {"1": 1, "2": 2, "3": 2, "4": 3, "5": 3, "6": 3, "7": 3,
+               "8": 4, "9": 4, "a": 4, "b": 4, "c": 4, "d": 4, "e": 4, "f": 4}
+
+_KNNLOO_K = 5
+
+_KNNLOO_SAMPLE_MOD = 5  # deterministic 1-in-5 sample gate for the LOO pass
+
+
+def _emb_micro_spark(df, id_cols=("vec_id",), vec_col="embedding"):
+    """(id..., label) + exploded (dim, vu) micro-unit int64 coordinates —
+    the kmeans_assign/semantic_dedup quantization (floor(x*1e6+0.5))."""
+    return df.select(
+        *id_cols, "label", F.posexplode(F.col(vec_col)).alias("dim", "x")
+    ).select(
+        *id_cols, "label", "dim",
+        F.floor(F.col("x").cast("double") * F.lit(1e6) + F.lit(0.5)).cast("long").alias("vu"),
+    )
 
 
 

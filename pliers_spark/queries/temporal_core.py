@@ -4,11 +4,11 @@
 Queries: asof_join, asof_join_forward, asof_join_nearest,
     asof_join_cogroup, asof_join_split, lag_lead, ffill, bfill,
     sessionize, rolling_window, resample_ffill, interval_join, object_id,
-    top_n_by_change, events_pivot, tpch_q1
+    top_n_by_change, events_pivot, tpch_q1, snapshot_asof
 """
 from __future__ import annotations
 
-from ._registry import A, F, TP, _events, load_table, query
+from ._registry import A, F, TP, _docs, _events, load_table, query
 from .core_parity import _GRID_START
 
 _GRID_END = "2024-01-31 00:00:00"
@@ -436,3 +436,60 @@ def q_tpch_q1(spark, sf_dir):
             F.count(F.lit(1)).alias("count_order"),
         )
     )
+
+
+
+# --------------------------------------------------------------------------
+# snapshot time travel over a versioned table (sources/snapshots.py)
+
+
+@query(
+    "snapshot_asof",
+    """SELECT 'asof_s1' AS snapshot_label,
+              count(*)::BIGINT AS n_docs, sum(n_chars)::BIGINT AS sum_chars
+       FROM documents WHERE doc_id % 3 = 0
+       UNION ALL
+       SELECT 'current', count(*)::BIGINT, sum(n_chars)::BIGINT
+       FROM documents WHERE doc_id % 3 IN (0, 1)
+       UNION ALL
+       SELECT 'delta_s2', count(*)::BIGINT, sum(n_chars)::BIGINT
+       FROM documents WHERE doc_id % 3 = 1""",
+)
+def q_snapshot_asof(spark, sf_dir):
+    """Iceberg-style snapshot isolation exercised end-to-end (north
+    rule: versioned input with time travel): commit docs with
+    doc_id%3==0 as snapshot 1, append doc_id%3==1 as snapshot 2, then
+    read (a) AS OF snapshot 1 — later commits must be invisible,
+    (b) the current table, and (c) the INCREMENTAL delta (s1, s2] —
+    only snapshot 2's files are scanned. The oracle is the pure
+    relational meaning of each read, so a stale manifest, a leaked
+    file, or a wrong delta walk all hash-mismatch. The table lives
+    under spark-warehouse/ and is rebuilt idempotently per run
+    (sources/snapshots.py; reference anchor: pliers has no versioned
+    store — this is the engine-level Iceberg contract the 10^12-page
+    crawl table needs)."""
+    import os
+    import shutil
+
+    from pliers_spark.sources.snapshots import SnapshotTable
+
+    tag = os.path.basename(sf_dir.rstrip("/"))
+    repo = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    root = os.path.join(repo, "spark-warehouse", f"_asof_demo_{tag}")
+    shutil.rmtree(root, ignore_errors=True)
+    t = SnapshotTable(root)
+    d = _docs(spark, sf_dir).select("doc_id", "n_chars")
+    s1 = t.commit(d.where(F.col("doc_id") % 3 == 0), "append")
+    s2 = t.commit(d.where(F.col("doc_id") % 3 == 1), "append")
+
+    def summarize(df, label):
+        return df.agg(
+            F.lit(label).alias("snapshot_label"),
+            F.count(F.lit(1)).cast("long").alias("n_docs"),
+            F.sum("n_chars").cast("long").alias("sum_chars"),
+        ).select("snapshot_label", "n_docs", "sum_chars")
+
+    asof = summarize(t.read(spark, s1), "asof_s1")
+    cur = summarize(t.read(spark), "current")
+    delta = summarize(t.read_incremental(spark, s1, s2), "delta_s2")
+    return asof.unionAll(cur).unionAll(delta)

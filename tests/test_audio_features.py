@@ -254,40 +254,6 @@ def test_tempogram_matches_numpy(spark):
     assert min(got) == 1 + 7 + 4
 
 
-class TestBeatTrack:
-    def test_dp_chain_on_periodic_onsets(self, spark):
-        """Strong onsets every PERIOD frames → the tracker locks onto
-        them: every strong frame is on the beat chain, steps = PERIOD."""
-        from pliers_spark.operators.beat import PERIOD, beat_track
-
-        rows = []
-        for t in range(24):
-            flux = 5.0 if t % PERIOD == 0 else 0.001
-            rows.append((1, t, flux))
-        df = spark.createDataFrame(rows, "user_id long, frame long, flux double")
-        beats = beat_track(df).orderBy("beat_seq").collect()
-        frames = [r["frame"] for r in beats]
-        assert frames[0] == 0 and frames[-1] == 20
-        assert all(b - a == PERIOD for a, b in zip(frames, frames[1:]))
-        seqs = [r["beat_seq"] for r in beats]
-        assert seqs == list(range(len(frames)))
-
-    def test_tie_breaks_smallest_d_and_smallest_end(self, spark):
-        """Flat onsets: every predecessor value ties at the unpenalized
-        d=PERIOD step; the end frame maximum is unique per the DP but
-        the backtrack must still be deterministic across engines."""
-        from pliers_spark.operators.beat import PERIOD, beat_track
-
-        df = spark.createDataFrame(
-            [(1, t, 1.0) for t in range(12)],
-            "user_id long, frame long, flux double",
-        )
-        beats = beat_track(df).orderBy("beat_seq").collect()
-        frames = [r["frame"] for r in beats]
-        # deterministic: strictly increasing, reaches frame 0
-        assert frames[0] == 0
-        assert all(b > a for a, b in zip(frames, frames[1:]))
-        assert all(b - a <= PERIOD * 2 for a, b in zip(frames, frames[1:]))
 
 
 def test_spectral_contrast_matches_numpy(frames, x):

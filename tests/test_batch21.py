@@ -1,11 +1,10 @@
-"""Batch 21: reciprocal-rank fusion, containment near-dup join, TPC-H Q18.
+"""Batch 21: reciprocal-rank fusion and the containment near-dup join.
 
 Semantics the sf-oracle can't isolate: containment-vs-Jaccard on an
 inclusion pair, the max_df stop-shingle guard, RRF's both-lists boost,
 and the exact 1/(60+r) integer fusion arithmetic.
 """
 
-import pytest
 from pyspark.sql import functions as F
 
 
@@ -106,14 +105,3 @@ def test_rrf_both_lists_beats_single_list(spark, tmp_path):
     # exact integer formula
     exp = round(1e6 / (60 + both.bm25_rank)) + round(1e6 / (60 + both.cos_rank))
     assert both.rrf_fp == exp
-
-
-def test_tpch_q18_limit_is_deterministic(spark):
-    from pliers_spark.queries import QUERIES
-
-    a = QUERIES["tpch_q18"](spark, "/root/testdata/sf0.001").collect()
-    b = QUERIES["tpch_q18"](spark, "/root/testdata/sf0.001").collect()
-    assert a == b
-    assert len(a) <= 100
-    # every returned order really is large-volume
-    assert all(r.total_qty > 250 for r in a)

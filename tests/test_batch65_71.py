@@ -1,7 +1,6 @@
 """Batches 65-71: interval-sum window distinct, tail index, energy
 distance, Bradley-Terry, McNemar, Chao-Shen, Borda/Copeland, Fisher LDA,
-Jarque-Bera, assortativity, burstiness, dispersion, densest subgraph,
-LPA, Huber, Luhn, Soundex, Gini drift, log loss, eigencentrality, Kish."""
+Jarque-Bera, assortativity, burstiness, dispersion."""
 
 import math
 import os
@@ -178,121 +177,3 @@ def test_dispersion_dp_bounds(spark, tmp_path):
     out = {r.word: r.dp for r in QUERIES["word_dispersion_dp"](spark, sf).collect()}
     assert out["only"] == 0.5
     assert out["aaaa"] == 0.0
-
-
-def test_densest_subgraph_finds_clique(spark, tmp_path):
-    """A 5-clique plus a long path: the density peak is the clique
-    (rho = 2.0) which peeling isolates."""
-    from pliers_spark.queries import QUERIES
-
-    rows = [(1, p) for p in (10, 20, 30, 40, 50)]  # K5
-    rows += [(100 + i, p) for i, p in enumerate(range(60, 70)) for p in (p, p + 1)]
-    # fix path construction: orders of 2 parts each
-    rows = [(1, p) for p in (10, 20, 30, 40, 50)]
-    for i in range(10):
-        rows += [(100 + i, 60 + i), (100 + i, 61 + i)]
-    sf = _write(spark, tmp_path, "lineitem", rows, LI)
-    r = QUERIES["densest_subgraph"](spark, sf).collect()[0]
-    assert r.n_nodes == 5 and r.n_edges == 10 and r.density == 2.0
-
-
-def test_label_propagation_two_cliques(spark, tmp_path):
-    """Two disjoint 4-cliques -> two communities of 4, labeled by their
-    min member."""
-    from pliers_spark.queries import QUERIES
-
-    rows = [(1, p) for p in (10, 20, 30, 40)] + [(2, p) for p in (50, 60, 70, 80)]
-    sf = _write(spark, tmp_path, "lineitem", rows, LI)
-    out = {r.community: r.n_members for r in QUERIES["label_propagation"](spark, sf).collect()}
-    assert out == {10: 4, 50: 4}
-
-
-def test_huber_resists_outlier(spark, tmp_path):
-    """One huge outlier drags the mean but barely moves the Huber
-    location."""
-    from pliers_spark.queries import QUERIES
-
-    rows = [(i, "t", "en", "s", 100 + (i % 11)) for i in range(50)]
-    rows.append((999, "t", "en", "s", 100000))
-    sf = _write(spark, tmp_path, "documents", rows, DOCS)
-    r = QUERIES["huber_location"](spark, sf).collect()[0]
-    assert r.mean > 2000  # dragged
-    assert 100 <= r.huber_mu <= 110  # robust
-    assert r.n_downweighted >= 1
-
-
-def test_luhn_picks_repeat_dense_block(spark, tmp_path):
-    """Doc with repeats concentrated in the second 10-token block."""
-    from pliers_spark.queries import QUERIES
-
-    text = " ".join([f"u{i}" for i in range(10)]) + " " + " ".join(["word"] * 10)
-    rows = [(1, text, "en", "s", len(text))]
-    sf = _write(spark, tmp_path, "documents", rows, DOCS)
-    r = QUERIES["luhn_summary"](spark, sf).collect()[0]
-    assert r.best_block == 1 and r.n_sig == 10
-    assert r.luhn_score_micro == 10 * 10 * 1000000 // 10
-
-
-def test_soundex_classic_codes(spark, tmp_path):
-    """robert and rupert share R163 (the canonical Soundex example)."""
-    from pliers_spark.queries import QUERIES
-
-    rows = [(1, "robert rupert ashcraft", "en", "s", 20)]
-    sf = _write(spark, tmp_path, "documents", rows, DOCS)
-    out = {r.soundex: r for r in QUERIES["soundex_blocking"](spark, sf).collect()}
-    assert "R163" in out
-    assert out["R163"].n_tokens == 2 and out["R163"].representative == "robert"
-
-
-def test_gini_over_time_equal_vs_skewed(spark, tmp_path):
-    """Day 0: equal activity -> Gini 0. Day 1: one user dominates ->
-    Gini > 0."""
-    from pliers_spark.queries import QUERIES
-
-    rows = []
-    eid = 0
-    for u in range(4):
-        rows.append((eid, datetime(2024, 1, 1), u, "t", 1.0, "")); eid += 1
-    for _ in range(9):
-        rows.append((eid, datetime(2024, 1, 2), 0, "t", 1.0, "")); eid += 1
-    for u in range(1, 4):
-        rows.append((eid, datetime(2024, 1, 2), u, "t", 1.0, "")); eid += 1
-    sf = _write(spark, tmp_path, "events", rows, EVENTS)
-    out = {r.day: r.gini for r in QUERIES["gini_over_time"](spark, sf).collect()}
-    assert out[0] == 0.0 and out[1] > 0.3
-
-
-def test_log_loss_confident_wrong_is_large(spark, tmp_path):
-    """Long non-en docs (confident p->1, y=0) produce much larger loss
-    than long en docs."""
-    from pliers_spark.queries import QUERIES
-
-    rows = [(i, "t", "en", "good", 5000) for i in range(10)]
-    rows += [(100 + i, "t", "fr", "bad", 5000) for i in range(10)]
-    sf = _write(spark, tmp_path, "documents", rows, DOCS)
-    out = {r.source: r.log_loss for r in QUERIES["log_loss"](spark, sf).collect()}
-    assert out["bad"] > 10 * out["good"]
-
-
-def test_eigenvector_centrality_star_center(spark, tmp_path):
-    """Star graph: the hub has centrality 1 (max), leaves tie below."""
-    from pliers_spark.queries import QUERIES
-
-    rows = []
-    for i, leaf in enumerate((20, 30, 40, 50)):
-        rows += [(i, 10), (i, leaf)]
-    sf = _write(spark, tmp_path, "lineitem", rows, LI)
-    out = QUERIES["eigenvector_centrality"](spark, sf).collect()
-    assert out[0].node == 10 and out[0].centrality == 1.0
-    assert all(r.centrality < 1.0 for r in out[1:])
-
-
-def test_kish_uniform_weights_full_ess(spark, tmp_path):
-    """Already-uniform lang mix -> all weights 1, ESS ratio 1."""
-    from pliers_spark.queries import QUERIES
-
-    rows = [(i, "t", ["en", "fr"][i % 2], "s", 10) for i in range(20)]
-    sf = _write(spark, tmp_path, "documents", rows, DOCS)
-    out = QUERIES["kish_weights"](spark, sf).collect()
-    assert all(r.weight == 1.0 for r in out)
-    assert all(r.ess_ratio == 1.0 for r in out)

@@ -39,7 +39,7 @@ def test_condensation_layers_structure(spark):
     node2scc = {r.node: r.scc_id for r in sccs}
     assert sum(r.n_members for r in layers.values()) == len(sccs)
     from pliers_spark.operators.graph import host_link_edges
-    from pliers_spark.queries import _docs
+    from pliers_spark.queries._registry import _docs
 
     edges = host_link_edges(_docs(spark, sf)).collect()
     for e in edges:

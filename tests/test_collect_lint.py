@@ -30,10 +30,6 @@ PKG = os.path.join(os.path.dirname(__file__), "..", "pliers_spark")
 WHITELIST: dict[tuple[str, str], tuple[int, str]] = {
     ("operators/census.py", "census_collect"): (
         1, "THE gate itself — limit(max_rows+1) fetch, raises over bound"),
-    ("operators/bpe.py", "bpe_learn"): (
-        1, "orderBy(...).limit(1): 1 row (best merge pair per round)"),
-    ("operators/bpe.py", "bpe_encode_counts"): (
-        1, "orderBy(...).limit(1): 1 row (best merge pair per round)"),
     ("queries/stats_06.py", "giant"): (
         1, "orderBy(gain).limit(1): 1 row (greedy max-coverage pick)"),
     ("queries/stats_06.py", "q_max_coverage"): (
@@ -66,16 +62,6 @@ WHITELIST: dict[tuple[str, str], tuple[int, str]] = {
         1, "agg(...)[0][0]: 1-row scalar agg (entropy numerator)"),
     ("queries/stats_15.py", "cond_ent_fp"): (
         1, "agg(...)[0][0]: 1-row scalar agg"),
-    ("queries/stats_16.py", "q_count_model_aic"): (
-        2, "agg(...)[0]: 1-row moment scalars (n, s1, max) + lnfact sum"),
-    ("queries/stats_16.py", "q_fisher_exact"): (
-        1, "agg(...)[0]: 2×2 contingency scalars in 1 row"),
-    ("queries/stats_17.py", "q_sign_test"): (
-        1, "agg(...)[0]: 1-row scalar agg (n, pos)"),
-    ("queries/stats_17.py", "q_pacf_levinson"): (
-        2, "agg(...)[0] moments + per-lag 1-row autocovariance scalar"),
-    ("queries/stats_17.py", "q_erlang_c"): (
-        1, "agg(...)[0]: 1-row scalar agg (duty-cycle parameters)"),
     ("sources/layout.py", "check_sorted_contract"): (
         1, "agg(sum)[0]: 1-row violation count"),
     ("sources/snapshots.py", "delete_where"): (

@@ -25,11 +25,28 @@ sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
 SF_DIR = "/root/testdata/sf0.01"
 
 
+def _restore_imports():
+    """Return a finalizer that puts ``sys.modules`` and ``sys.path`` back
+    as they are now: it drops the import stubs and pliers and brings back
+    any module a stub replaced, so later test modules never see a fake
+    nltk/scipy. Registered before the stubs go in, it also runs when the
+    fixture skips because the reference does not import."""
+    modules, path = dict(sys.modules), list(sys.path)
+
+    def restore():
+        for name in set(sys.modules) - set(modules):
+            del sys.modules[name]
+        sys.modules.update(modules)
+        sys.path[:] = path
+
+    return restore
+
+
 @pytest.fixture(scope="module")
-def pliers_mods():
+def pliers_mods(request):
     from reference_throughput import install_stubs
 
-    before = set(sys.modules)
+    request.addfinalizer(_restore_imports())
     install_stubs()
     sys.path.insert(0, "/root/reference")
     try:
@@ -39,11 +56,6 @@ def pliers_mods():
     except Exception as e:  # pragma: no cover
         pytest.skip(f"reference not importable: {e}")
     yield TextStim, LengthExtractor, LowerCasingFilter, PunctuationRemovalFilter
-    # drop the import stubs + pliers so later test modules in this same
-    # pytest process never see a fake nltk/scipy in sys.modules
-    for name in set(sys.modules) - before:
-        del sys.modules[name]
-    sys.path.remove("/root/reference")
 
 
 @pytest.fixture(scope="module")
@@ -133,7 +145,8 @@ def test_dictionary_lookup_matches_reference(spark, pliers_mods):
     from pliers.extractors import DictionaryExtractor
     from pliers.stimuli import TextStim
 
-    from pliers_spark.queries import _LEXICON_ROWS, QUERIES
+    from pliers_spark.queries import QUERIES
+    from pliers_spark.queries.core_parity import _LEXICON_ROWS
 
     dictionary = pd.DataFrame(
         [(l, f, s) for (_, l, f, s) in _LEXICON_ROWS],
@@ -241,10 +254,10 @@ def test_merge_results_wide_and_long_match_engine(spark, pliers_mods, docs_pdf):
 
 
 @pytest.fixture(scope="module")
-def pliers_image_mods():
+def pliers_image_mods(request):
     from reference_throughput import install_stubs
 
-    before = set(sys.modules)
+    request.addfinalizer(_restore_imports())
     install_stubs()
     sys.path.insert(0, "/root/reference")
     try:
@@ -253,9 +266,6 @@ def pliers_image_mods():
     except Exception as e:  # pragma: no cover
         pytest.skip(f"reference image extractors not importable: {e}")
     yield ImageStim, BrightnessExtractor, VibranceExtractor
-    for name in set(sys.modules) - before:
-        del sys.modules[name]
-    sys.path.remove("/root/reference")
 
 
 def test_image_features_match_actual_pliers(spark, pliers_image_mods):

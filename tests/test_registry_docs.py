@@ -35,6 +35,11 @@ def test_bench_headline_names_are_registered():
     q = _registry()
     missing = [n for n in bench.HEADLINE_QUERIES if n not in q]
     assert not missing, f"bench HEADLINE names not in registry: {missing}"
+    # every query a recorded correctness run sampled must stay registered
+    for i in range(1, 6):
+        path = os.path.join(REPO, f"CORRECTNESS_r0{i}.json")
+        sampled = [n for n in json.load(open(path)) if n not in q]
+        assert not sampled, f"{os.path.basename(path)} names not in registry: {sampled}"
     assert len(set(bench.HEADLINE_QUERIES)) == len(bench.HEADLINE_QUERIES), (
         "duplicate names in HEADLINE_QUERIES"
     )
